@@ -40,7 +40,8 @@ def register(spark):
     plain reader is registered, because Spark refuses any reader that even
     implements ``pushFilters`` while the conf is disabled; a per-read
     ``.option("filterpushdown", "true"/"false")`` still overrides either
-    default."""
+    default. The registered class also carries the session's task-slot
+    count, which sizes every ``format("metadata")`` scan."""
     from .sources.datasource import (
         MetadataDataSource,
         PushdownEnabledMetadataDataSource,
@@ -55,8 +56,11 @@ def register(spark):
         )
     except Exception:
         conf_on = False
-    spark.dataSource.register(
-        PushdownEnabledMetadataDataSource if conf_on else MetadataDataSource
-    )
+    try:
+        slots = spark.sparkContext.defaultParallelism
+    except AttributeError:  # Spark Connect has no SparkContext: min(n_files, maxparts)
+        slots = None
+    base = PushdownEnabledMetadataDataSource if conf_on else MetadataDataSource
+    spark.dataSource.register(base.for_session(slots))
     register_udtfs(spark)
     return spark

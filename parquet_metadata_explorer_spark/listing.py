@@ -7,8 +7,10 @@ Scale note (SURVEY §7 risk 4): the reference lists on the driver, which is
 fine to ~10^5 files. ``list_files`` therefore supports a *distributed* mode:
 when the root has many first-level subdirectories, the per-directory listing
 runs as a Spark job (one task per directory) and only the resulting
-FileInfo seeds come back to the driver. Either way the scan itself
-parallelizes over files with ``numSlices = min(n_files, maxparts)``.
+FileInfo seeds come back to the driver. Either way the scan itself runs
+``max(1, min(n_files, maxparts, defaultParallelism))`` tasks over
+contiguous file slices (``sources.rows.plan_slices``): a Python task costs
+~90 ms against ~1 ms of footer work per file.
 
 Partition values round-trip through the same typed inference Spark's
 partition discovery applies (int -> long -> decimal -> double -> date ->

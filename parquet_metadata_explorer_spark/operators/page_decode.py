@@ -23,7 +23,9 @@ from typing import Iterator, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..options import DEFAULT_MAX_PARTS
 from ..sources.api import read_metadata
+from ..sources.rows import scan_rdd
 
 
 _DECODABLE = {
@@ -148,7 +150,7 @@ def column_values(
     spark: SparkSession,
     path: str,
     columns: Optional[list] = None,
-    maxparts: int = 200,
+    maxparts: int = DEFAULT_MAX_PARTS,
 ) -> DataFrame:
     """Full column reconstruction from raw page bytes: dictionary pages +
     RLE/bit-packed-hybrid data pages (def levels included) decode back
@@ -159,8 +161,8 @@ def column_values(
     DELTA_BINARY_PACKED / DELTA_LENGTH_BYTE_ARRAY / DELTA_BYTE_ARRAY /
     BYTE_STREAM_SPLIT encodings (everything pyarrow/parquet-mr write for
     flat data); nested columns are skipped. Execution shape: one task per
-    file slice, one streaming page walk per chunk — memory is one
-    dictionary + one page.
+    file slice (``sources.rows.plan_slices``), one streaming page walk per
+    chunk — memory is one dictionary + one page.
 
     Output: (row_group_id, pos, col_path, value) with value as canonical
     string, NULL for null rows; ``pos`` is the row index within the row
@@ -190,8 +192,6 @@ def column_values(
         ]
     )
     files = list_files(path, spark=spark)
-    if not files:
-        return spark.createDataFrame([], schema)
     wanted = set(columns) if columns else None
 
     def reconstruct(f):
@@ -282,6 +282,5 @@ def column_values(
                 )
                 pos += 1
 
-    num_slices = max(1, min(len(files), maxparts))
-    rdd = spark.sparkContext.parallelize(files, num_slices).flatMap(reconstruct)
+    rdd = scan_rdd(spark, files, maxparts, reconstruct)
     return spark.createDataFrame(rdd, schema)

@@ -58,6 +58,13 @@ def validate_source_level(source: str, level: str) -> None:
         raise ValueError(f"Source '{source}' does not support '{level}' level")
 
 
+def validate_maxparts(maxparts: int) -> None:
+    """Reject a scan-task cap below one (every entry point that takes
+    ``maxparts`` raises this same error)."""
+    if maxparts < 1:
+        raise ValueError(f"Invalid value for maxparts: {maxparts}, must be > 0")
+
+
 def parse_options(parameters: dict) -> MetadataOptions:
     """Parse a string-keyed option map (as handed over by
     ``spark.read.format("metadata").option(...)``)."""
@@ -67,8 +74,7 @@ def parse_options(parameters: dict) -> MetadataOptions:
         raise ValueError("Option 'path' is required")
 
     maxparts = int(params.get("maxparts", DEFAULT_MAX_PARTS))
-    if maxparts < 1:
-        raise ValueError(f"Invalid value for maxparts: {maxparts}, must be > 0")
+    validate_maxparts(maxparts)
     buffersize = int(params.get("buffersize", DEFAULT_BUFFER_SIZE))
     if buffersize < 1:
         raise ValueError(f"Invalid value for buffersize: {buffersize}, must be > 0")

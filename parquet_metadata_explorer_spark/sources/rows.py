@@ -1,9 +1,12 @@
-"""Per-level row emitters — the executor-side flatMap core.
+"""Per-level row emitters, their one dispatch table, and scan planning.
 
 Each emitter takes a ``FileInfo`` seed and yields plain tuples matching the
-corresponding StructType in ``schemas.py``. These run inside Spark tasks
-(one task per slice of files); everything above them — filter, project,
-join, agg — is ordinary Catalyst-optimized Spark SQL.
+corresponding StructType in ``schemas.py``. ``EMITTERS`` maps every
+``(source, level)`` to its emitter for all three entry points (function
+API, ``format("metadata")``, SQL table functions). Emitters run inside
+Spark tasks, one task per slice of files from ``plan_slices``; everything
+above them — filter, project, join, agg — is ordinary Catalyst-optimized
+Spark SQL.
 
 Parity targets: FILE rows ``MetadataFileFormat.scala:110-131``; parquet
 file rows ``:163-179``; rowgroup ``:180-193`` (+ ``ParquetUtils.scala:130-157``);
@@ -12,10 +15,13 @@ column ``:194-231`` (+ ``ParquetUtils.scala:159-245``); page ``:232-320``.
 
 from __future__ import annotations
 
-from typing import Iterator
+from itertools import chain
+from typing import Iterator, Optional
 
 from ..listing import FileInfo
+from ..options import DEFAULT_BUFFER_SIZE, LEVEL_PAGE, validate_maxparts
 from ..parquet.footer import read_footer, schema_to_string
+from ..parquet.io import fs_options_snapshot, install_fs_options
 from ..parquet.pages import iter_pages
 from ..parquet.thrift import (
     COMPRESSION_CODECS,
@@ -105,7 +111,10 @@ def column_rows(f: FileInfo) -> Iterator[tuple]:
 
 
 def page_rows(
-    f: FileInfo, buffer_size: int, page_content: bool, metrics=None
+    f: FileInfo,
+    buffer_size: int = DEFAULT_BUFFER_SIZE,
+    page_content: bool = False,
+    metrics=None,
 ) -> Iterator[tuple]:
     for page in iter_pages(
         f.path,
@@ -115,3 +124,61 @@ def page_rows(
         on_close=metrics.add if metrics is not None else None,
     ):
         yield page + (f.path,)
+
+
+#: (source, level) -> per-file emitter (keys as in ``schemas.SCHEMAS_BY_LEVEL``)
+EMITTERS = {
+    ("file", "file"): file_rows,
+    ("parquet", "file"): parquet_file_rows,
+    ("parquet", "rowgroup"): rowgroup_rows,
+    ("parquet", "column"): column_rows,
+    ("parquet", "page"): page_rows,
+}
+
+
+def emitter(source, level, *page_args):
+    """The one-argument emitter for ``(source, level)``; ``page_args``
+    (buffer size, page content, metrics) bind only at page level."""
+    emit = EMITTERS[(source, level)]
+    return (lambda f: emit(f, *page_args)) if level == LEVEL_PAGE else emit
+
+
+def plan_slices(files: list, maxparts: int, slots: Optional[int] = None) -> list:
+    """``files`` cut into ``max(1, min(n_files, maxparts, slots))``
+    contiguous chunks in listing order, one scan task each. A Python task
+    costs ~90 ms against ~1 ms of footer work per file, so a scan runs one
+    task per task slot (``slots``: the session's ``defaultParallelism``;
+    None leaves ``min(n_files, maxparts)``), capped by ``maxparts``."""
+    validate_maxparts(maxparts)
+    n = max(1, min(len(files), maxparts, slots or maxparts))
+    return [files[i * len(files) // n : (i + 1) * len(files) // n] for i in range(n)]
+
+
+def scan_rows(files, emit, fs_snapshot=None, part_keys=()) -> Iterator[tuple]:
+    """The rows of ``files`` in order: the body of one scan task.
+
+    ``fs_snapshot`` (the driver's ``fs_options_snapshot()``) installs once,
+    before any filesystem resolve, since module globals do not cross the
+    task boundary. An EMPTY snapshot still installs (wholesale-replacing
+    the worker registry): a reused worker must not resolve with a previous
+    job's options. ``part_keys`` appends those partition values to rows.
+    """
+    if fs_snapshot is not None:
+        install_fs_options(fs_snapshot)
+    for f in files:
+        if not part_keys:
+            yield from emit(f)
+            continue
+        suffix = tuple(f.partition_map().get(k) for k in part_keys)
+        for row in emit(f):
+            yield tuple(row) + suffix
+
+
+def scan_rdd(spark, files: list, maxparts: int, emit):
+    """``emit``'s rows over ``files`` as an RDD: one partition per
+    ``plan_slices`` chunk, no shuffle."""
+    chunks = plan_slices(files, maxparts, spark.sparkContext.defaultParallelism)
+    snap = fs_options_snapshot()
+    return spark.sparkContext.parallelize(chunks, len(chunks)).mapPartitions(
+        lambda it: scan_rows(chain.from_iterable(it), emit, snap)
+    )

@@ -12,7 +12,7 @@ the listing DataFrame's partitioning instead of a single eval call):
     SELECT f.filepath, c.path, c.num_values
     FROM metadata_files_df f, LATERAL metadata_columns(f.filepath) c
 
-The UDTF bodies reuse exactly the ``sources/rows.py`` emitters that back
+The UDTF bodies dispatch through the ``rows.EMITTERS`` table that backs
 ``read_metadata()`` and ``format("metadata")`` — three entry points, one
 row contract (SURVEY §1.2 schemas, byte-for-byte). Python UDTFs are a
 Spark 4.x surface (``pyspark.sql.functions.udtf``); the page variant
@@ -24,21 +24,17 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from ..listing import list_files
-from ..options import DEFAULT_BUFFER_SIZE
+from ..listing import list_files, prune_files_by_partition
 from ..schemas import SCHEMAS_BY_LEVEL
 from . import rows as R
 
-#: UDTF name -> ((source, level) schema key, per-FileInfo emitter)
-_SPECS = {
-    "metadata_files": (("file", "file"), R.file_rows),
-    "metadata_parquet_file": (("parquet", "file"), R.parquet_file_rows),
-    "metadata_rowgroups": (("parquet", "rowgroup"), R.rowgroup_rows),
-    "metadata_columns": (("parquet", "column"), R.column_rows),
-    "metadata_pages": (
-        ("parquet", "page"),
-        lambda fi: R.page_rows(fi, DEFAULT_BUFFER_SIZE, False),
-    ),
+#: UDTF name -> (source, level)
+_UDTFS = {
+    "metadata_files": ("file", "file"),
+    "metadata_parquet_file": ("parquet", "file"),
+    "metadata_rowgroups": ("parquet", "rowgroup"),
+    "metadata_columns": ("parquet", "column"),
+    "metadata_pages": ("parquet", "page"),
 }
 
 
@@ -50,11 +46,8 @@ def _make_udtf_class(emit):
             # listing for wide roots). The optional second argument is the
             # same "col=a|b,col2=v" conjunction the partitionfilter option
             # takes: pruned files are never footer-read, from pure SQL.
-            from ..listing import prune_files_by_partition
-
             files = prune_files_by_partition(list_files(path), partition_filter)
-            for fi in files:
-                yield from emit(fi)
+            yield from R.scan_rows(files, emit)
 
     return MetadataUDTF
 
@@ -63,10 +56,9 @@ def register_udtfs(spark: SparkSession) -> SparkSession:
     """Register all metadata table functions with this session."""
     from pyspark.sql.functions import udtf
 
-    for name, (key, emit) in _SPECS.items():
-        spark.udtf.register(
-            name, udtf(_make_udtf_class(emit), returnType=SCHEMAS_BY_LEVEL[key])
-        )
+    for name, key in _UDTFS.items():
+        cls = _make_udtf_class(R.emitter(*key))
+        spark.udtf.register(name, udtf(cls, returnType=SCHEMAS_BY_LEVEL[key]))
     from .api import _page_index_schema, page_index_rows
 
     spark.udtf.register(

@@ -132,7 +132,7 @@ def test_fs_options_construct_explicit_filesystems(tmp_path):
     fs3, _ = resolve_filesystem("s3://bucket/y")
     assert isinstance(fs3, pafs.S3FileSystem)
     clear_fs_options()
-    install_fs_options(snap)  # what _fs_threaded does worker-side
+    install_fs_options(snap)  # what scan_rows does worker-side
     fs4, _ = resolve_filesystem("s3://bucket/z")
     assert isinstance(fs4, pafs.S3FileSystem)
     clear_fs_options()

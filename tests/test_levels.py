@@ -180,6 +180,9 @@ def test_encoding_stats_match_page_scan(spark, sf_dir):
     import parquet_metadata_explorer_spark as pqx
 
     cols = pqx.read_metadata(spark, sf_dir, source="parquet", level="column")
+    # 10 files: one scan task per slot, capped by maxparts
+    slots = spark.sparkContext.defaultParallelism
+    assert cols.rdd.getNumPartitions() == min(10, 200, slots)
     stats = (
         cols.filter(F.col("encoding_stats").isNotNull())
         .select(
